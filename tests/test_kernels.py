@@ -177,3 +177,19 @@ def test_kernel_routing_threshold(spark, sf_dir):
         got = {tuple(r) for r in dd.simhash(big).collect()}
         want = {tuple(r) for r in dd.simhash(big, vectorized=False).collect()}
         assert got == want
+
+
+def test_estimated_bytes_none_when_unknown(spark, sf_dir):
+    """The one Catalyst size probe (kernel gate, q3 semi prune, q21
+    keying): a file scan has an estimate; Long.MaxValue "unknown" (a
+    createDataFrame LogicalRDD) and a probe that raises give None."""
+    from warp10_platform_spark.pipeline.util import estimated_bytes
+    from warp10_platform_spark.sources.tables import load_table
+
+    assert estimated_bytes(load_table(spark, sf_dir, "documents")) > 0
+    assert estimated_bytes(_adversarial_docs(spark)) is None
+
+    class NoPlan:
+        _jdf = None
+
+    assert estimated_bytes(NoPlan()) is None

@@ -136,6 +136,199 @@ def test_checkpoint_folds_overlays(spark, sf_dir, tmp_path):
     assert snap(st2) == before
 
 
+def _rows(df):
+    """Every row of `df` as a sortable repr (maps as sorted item lists),
+    so two frames compare bit for bit, -0.0 included."""
+    return sorted(
+        repr(tuple(sorted(v.items()) if isinstance(v, dict) else v for v in r))
+        for r in df.collect()
+    )
+
+
+def test_update_one_pass_equals_per_batch_fold(spark):
+    """update(base, b1, b2, b3) — one LWW window over the union — keeps
+    exactly the rows of the fold update(update(update(base, b1), b2), b3):
+    duplicate ticks inside a batch (the larger value wins, a double beats
+    a null v_double), overwrites across batches (the newest batch wins,
+    a string over a double and back) and untouched base points."""
+    from warp10_platform_spark.sources import write as W
+    from warp10_platform_spark.sources.gts_text import parse
+
+    base = parse(spark, [
+        "1// eq.a{k=1} 1.0", "2// eq.a{k=1} 2.0", "3// eq.a{k=1} 3.0",
+        "1// eq.b{k=2} 'x'", "2// eq.b{k=2} T", "4// eq.b{k=2} 40",
+    ])
+    b1 = parse(spark, [
+        "2// eq.a{k=1} 20.0", "2// eq.a{k=1} 21.0",     # in-batch dup: 21 wins
+        "3// eq.a{k=1} 'str'",                          # null v_double overwrites
+        "1// eq.b{k=2} 'y'", "1// eq.b{k=2} 5.5",       # double beats null in-batch
+        "9// eq.c{k=3} 9.0",
+    ])
+    b2 = parse(spark, [
+        "3// eq.a{k=1} 30.0",                           # double over the string
+        "2// eq.b{k=2} F", "2// eq.b{k=2} 'z'",         # two null v_doubles lose
+        "2// eq.b{k=2} -0.0",                           # to the one double
+        "9// eq.c{k=3} 'late'",
+    ])
+    b3 = parse(spark, [
+        "2// eq.a{k=1} 0.5", "2// eq.a{k=1} 1e300",     # in-batch dup: 1e300 wins
+        "4// eq.b{k=2} 'last'",
+        "10// eq.c{k=3} 10.0",
+    ])
+    one_pass = W.update(base, b1, b2, b3)
+    folded = W.update(W.update(W.update(base, b1), b2), b3)
+    assert _rows(one_pass) == _rows(folded)
+    got = {(r["class"], r["ts"]): (r["v_double"], r["v_string"]) for r in one_pass.collect()}
+    assert got[("eq.a", 2)] == (1e300, None)
+    assert got[("eq.a", 3)] == (30.0, None)
+    assert got[("eq.b", 1)] == (5.5, None)
+    assert got[("eq.b", 4)] == (None, "last")
+    assert got[("eq.c", 9)] == (None, "late")
+    assert len(got) == 8
+
+
+def _plan_lines(df) -> int:
+    return len(df._jdf.queryExecution().analyzed().toString().splitlines())
+
+
+def test_store_plan_grows_linearly_with_buffers(spark, sf_dir, tmp_path):
+    """Merge-on-read over N buffers is one LWW pass, so every buffer adds
+    the same number of analyzed-plan lines (a fold per buffer doubles the
+    plan with each /update)."""
+    from warp10_platform_spark.server import Store
+
+    st = Store(spark, sf_dir, str(tmp_path / "store"))
+    sizes = []
+    for i in range(1, 6):
+        st.append_update(f"{i}000000// grow.a{{x=1}} {i}\n")
+        sizes.append(_plan_lines(st.points()))
+    steps = {b - a for a, b in zip(sizes, sizes[1:])}
+    assert len(steps) == 1 and steps.pop() > 0, sizes
+
+
+def _store_points(st, cls):
+    return sorted((r["ts"], r["v_long"]) for r in st.points().where(f"class = '{cls}'").collect())
+
+
+def test_store_restart_keeps_batch_ids_unique(spark, sf_dir, tmp_path):
+    """A Store reopened on the same dir continues after the highest
+    existing batch id: the update after a restart adds a batch instead of
+    overwriting buffer/b000001."""
+    from warp10_platform_spark.server import Store
+
+    d = str(tmp_path / "store")
+    st = Store(spark, sf_dir, d)
+    st.append_update("1000000// rs.a{x=1} 1\n")
+    st.append_update("2000000// rs.a{x=1} 2\n")
+    st2 = Store(spark, sf_dir, d)
+    st2.append_update("3000000// rs.a{x=1} 3\n")
+    assert _store_points(st2, "rs.a") == [(1000000, 1), (2000000, 2), (3000000, 3)]
+
+
+def test_checkpoint_keeps_writes_that_land_during_it(spark, sf_dir, tmp_path, monkeypatch):
+    """An update and a tombstone that arrive while checkpoint() writes
+    the new base are not in its listing, so they survive it."""
+    import os
+
+    from pyspark.sql import DataFrameWriter
+
+    from warp10_platform_spark.server import Store
+
+    st = Store(spark, sf_dir, str(tmp_path / "store"))
+    st.append_update("1000000// race.a{x=1} 1\n")
+    st.append_update("1000000// race.b{x=1} 1\n")
+    st.add_meta("race.a{}", {"o": "y"})
+
+    write_parquet = DataFrameWriter.parquet
+    raced = []
+
+    def racing(writer, path, *a, **k):
+        write_parquet(writer, path, *a, **k)
+        if os.path.basename(path).startswith("base_") and not raced:
+            raced.append(path)
+            st.append_update("2000000// race.a{x=1} 2\n")
+            st.add_tombstone("race.b{}", None, None)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", racing)
+    st.checkpoint()
+    monkeypatch.undo()
+    assert raced
+    assert _store_points(st, "race.a") == [(1000000, 1), (2000000, 2)]
+    assert _store_points(st, "race.b") == []
+    # the folded meta entry is gone from the overlay, the racing tombstone is not
+    assert not os.path.exists(os.path.join(st.dir, "meta.json"))
+    assert [t["selector"] for t in st._load_json("tombstones.json")] == ["race.b{}"]
+
+
+def test_checkpoint_under_concurrent_writers(spark, sf_dir, tmp_path):
+    """Stress: tombstone writers and /update threads racing one
+    checkpoint. Every acknowledged entry and batch is either in the
+    listing the checkpoint folded or still in the overlay, never both,
+    and concurrent updates get distinct batch ids."""
+    import os
+    import sys
+    import threading
+    import time
+
+    from warp10_platform_spark.server import Store
+
+    st = Store(spark, sf_dir, str(tmp_path / "store"))
+    st.append_update("1// stress.u{w=0} 0\n")
+    listed = []
+    listing = st._listing
+
+    def recording():
+        listed.append(listing())
+        return listed[-1]
+
+    st._listing = recording
+    stop = threading.Event()
+    added, errors = [], []
+
+    def tombstones(w):
+        try:
+            for i in range(300):
+                if stop.is_set():
+                    return
+                st.add_tombstone(f"stress.none{{w={w},i={i}}}", None, None)
+                added.append(f"stress.none{{w={w},i={i}}}")
+                time.sleep(0.002)
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            errors.append(e)
+
+    def updates(w):
+        try:
+            for i in range(2):
+                st.append_update(f"{i + 2}// stress.u{{w={w}}} {i}\n")
+        except Exception as e:  # noqa: BLE001
+            errors.append(e)
+
+    threads = [threading.Thread(target=tombstones, args=(w,)) for w in range(6)]
+    threads += [threading.Thread(target=updates, args=(w,)) for w in (1, 2)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        st.checkpoint()
+        stop.set()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not errors
+    _, folded_bufs, folded_tombs, _ = listed[0]
+    folded = {t["selector"] for t in folded_tombs}
+    left = [t["selector"] for t in st._load_json("tombstones.json")]
+    assert folded.isdisjoint(left) and folded | set(left) == set(added)
+    assert len(left) == len(set(left))
+    buf = os.path.join(st.dir, "buffer")
+    kept = [d for d in os.listdir(buf) if os.path.exists(os.path.join(buf, d, "_SUCCESS"))]
+    assert {os.path.basename(d) for d in folded_bufs}.isdisjoint(kept)
+    assert len(folded_bufs) + len(kept) == 5
+
+
 def test_exec_gts_response(server):
     script = b"NEWGTS 'g' RENAME 1 NaN NaN NaN 10.5 ADDVALUE"
     code, body, _ = _post(f"{server}/api/v0/exec", script)

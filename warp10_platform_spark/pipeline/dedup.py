@@ -30,7 +30,7 @@ _XX64 = "xxhash64({x})"
 _MD5_64 = "cast(conv(substr(md5({x}), 1, 15), 16, 10) AS bigint)"
 
 
-from warp10_platform_spark.pipeline.util import spread as _spread
+from warp10_platform_spark.pipeline.util import estimated_bytes, spread as _spread
 
 # r10 (guide §4.2): above this estimated input size, the fingerprint
 # folds (simhash's per-token ±1 majority, minhash's 32-hash signature)
@@ -54,15 +54,11 @@ def _kernel_input(docs: DataFrame) -> bool:
     frames have no size estimate and keep the streamable HOF forms."""
     if docs.isStreaming:
         return False
-    try:
-        size = int(docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return False
-    # Long.MaxValue is Catalyst's "unknown" sentinel (e.g. LogicalRDD
-    # from createDataFrame): keep the HOF form there — real corpora come
-    # from files/tables whose estimates exist, and unknown-size test
-    # frames should take the same plan the bench SFs take.
-    return _KERNEL_MIN_BYTES <= size < (1 << 63) - 1
+    size = estimated_bytes(docs)
+    # unknown size (e.g. LogicalRDD from createDataFrame) keeps the HOF
+    # form: real corpora come from files/tables whose estimates exist,
+    # and unknown-size test frames should take the plan the bench SFs take.
+    return size is not None and size >= _KERNEL_MIN_BYTES
 
 
 def exact_dup_groups(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -10,6 +10,7 @@ import os as _os
 
 from pyspark.sql import functions as F
 
+from warp10_platform_spark.pipeline.util import estimated_bytes
 from warp10_platform_spark.queries import register
 from warp10_platform_spark.sources.tables import epoch_us_col, load_table
 
@@ -150,11 +151,8 @@ def tpch_q3(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders").where(F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp_ntz"))
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > F.lit("1995-03-15").cast("timestamp_ntz"))
     oc = o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-    try:
-        o_bytes = int(o._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        o_bytes = 1 << 62
-    if o_bytes < _Q3_SEMI_MAX_BYTES:
+    o_bytes = estimated_bytes(o)
+    if o_bytes is not None and o_bytes < _Q3_SEMI_MAX_BYTES:
         li = li.join(
             F.broadcast(oc.select("o_orderkey")), li.l_orderkey == F.col("o_orderkey"), "left_semi"
         )

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from warp10_platform_spark.pipeline.util import estimated_bytes
 from warp10_platform_spark.queries import register
 from warp10_platform_spark.sources.tables import bucketed_fact, load_table
 
@@ -417,11 +418,8 @@ def tpch_q21_waiting_supplier(spark, sf_dir):
         "CASE WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY THEN 1 ELSE 0 END"
     )
     lsj = li.join(o.select("o_orderkey", "o_orderdate"), li.l_orderkey == F.col("o_orderkey"))
-    try:
-        li_bytes = int(li._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        li_bytes = 0
-    if 0 < li_bytes < _Q21_KEYED_MAX_BYTES:
+    li_bytes = estimated_bytes(li)
+    if li_bytes is not None and 0 < li_bytes < _Q21_KEYED_MAX_BYTES:
         lsj = lsj.repartition("l_orderkey")
     ls = lsj.groupBy("l_orderkey", "l_suppkey").agg(F.max(late).alias("late"))
     w = Window.partitionBy("l_orderkey")

@@ -167,24 +167,44 @@ class PlasmaHub:
 class Store:
     """Mutable overlay on the immutable base lake.
 
-    - ``buffer/``        appended parquet from /update (LWW over base)
+    - ``buffer/bNNNNNN``  one parquet batch per /update (LWW over base)
     - ``tombstones.json`` list of {selector, start, end} from /delete
     - ``meta.json``       list of {selector, attributes} from /meta
+
+    Batch ids are unique and increase in write order, across restarts
+    too: a new Store continues after the highest ``bNNNNNN`` already in
+    ``buffer/`` (an offset log in the Structured Streaming sense), so a
+    restart never overwrites an acknowledged batch.
+
+    A read is ``base ∪ all buffers → LWW → ¬tombstones → meta`` as one
+    lazy plan; the LWW is a single pass over the union, whatever the
+    number of buffers (``sources.write.update``).  ``checkpoint()`` lists
+    the overlay once, writes that listing folded into a new base, then
+    deletes exactly the listed buffers and drops exactly the listed
+    JSON entries: a write that lands while the base is written survives
+    it and stays on top of the new base.
     """
 
     def __init__(self, spark, sf_dir: str, store_dir: str):
         self.spark = spark
         self.sf_dir = sf_dir
         self.dir = store_dir
-        os.makedirs(os.path.join(store_dir, "buffer"), exist_ok=True)
+        self._buf = os.path.join(store_dir, "buffer")
+        os.makedirs(self._buf, exist_ok=True)
         self._lock = threading.Lock()
-        self._n_appends = 0
+        self._checkpoint_lock = threading.Lock()
+        self._batch_id = max(self._batch_ids(), default=0)
         self.hub = PlasmaHub()
         # a prior checkpoint() may have produced an owned base snapshot
-        bases = sorted(
-            d for d in os.listdir(store_dir) if d.startswith("base_")
-        ) if os.path.exists(store_dir) else []
+        bases = sorted(d for d in os.listdir(store_dir) if d.startswith("base_"))
         self._base_dir = os.path.join(store_dir, bases[-1]) if bases else None
+
+    def _batch_ids(self) -> list[int]:
+        """Ids of the batch dirs in ``buffer/``, oldest first (numeric
+        order: ids outgrow the 6-digit padding)."""
+        return sorted(
+            int(d[1:]) for d in os.listdir(self._buf) if d[:1] == "b" and d[1:].isdigit()
+        )
 
     # ---- write paths -------------------------------------------------
     def append_update(self, text: str) -> int:
@@ -196,9 +216,9 @@ class Store:
         now_us = int(time.time() * _tuc.UNITS_PER_S)
         pts = parse(self.spark, lines, default_ts=now_us)
         with self._lock:
-            self._n_appends += 1
-            sub = os.path.join(self.dir, "buffer", f"b{self._n_appends:06d}")
-        pts.write.mode("overwrite").parquet(sub)
+            self._batch_id += 1
+            sub = os.path.join(self._buf, f"b{self._batch_id:06d}")
+        pts.write.parquet(sub)
         # committed → push to Plasma subscribers (the reference's
         # StandaloneIngressHandler also publishes post-store)
         self.hub.publish(text)
@@ -206,16 +226,20 @@ class Store:
         # we report the accepted count in a header instead)
         return self.spark.read.parquet(sub).count()
 
-    def _append_json(self, name: str, entry: dict) -> None:
+    def _write_json(self, name: str, items: list) -> None:
         path = os.path.join(self.dir, name)
-        with self._lock:
-            items = []
+        if not items:
             if os.path.exists(path):
-                items = json.load(open(path))
-            items.append(entry)
-            tmp = path + ".tmp"
-            json.dump(items, open(tmp, "w"))
-            os.replace(tmp, path)
+                os.remove(path)
+            return
+        tmp = path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(items, f)
+        os.replace(tmp, path)
+
+    def _append_json(self, name: str, entry: dict) -> None:
+        with self._lock:
+            self._write_json(name, self._load_json(name) + [entry])
 
     def add_tombstone(self, selector: str, start: int | None, end: int | None) -> None:
         self._append_json("tombstones.json", {"selector": selector, "start": start, "end": end})
@@ -225,71 +249,78 @@ class Store:
 
     def _load_json(self, name: str) -> list:
         path = os.path.join(self.dir, name)
-        return json.load(open(path)) if os.path.exists(path) else []
+        if not os.path.exists(path):
+            return []
+        with open(path) as f:
+            return json.load(f)
 
     # ---- read path ---------------------------------------------------
-    def points(self) -> DataFrame:
-        """base ∪ buffer, buffer wins per (series, tick); then
-        tombstones, then the meta overlay — one lazy plan."""
+    def _listing(self) -> tuple:
+        """(base dir, committed buffer dirs in write order, tombstones,
+        meta entries): one consistent view of the overlay."""
+        with self._lock:
+            bufdirs = [os.path.join(self._buf, f"b{i:06d}") for i in self._batch_ids()]
+            return (
+                self._base_dir,
+                [d for d in bufdirs if os.path.exists(os.path.join(d, "_SUCCESS"))],
+                self._load_json("tombstones.json"),
+                self._load_json("meta.json"),
+            )
+
+    def _compose(self, base_dir, bufdirs, tombstones, metas) -> DataFrame:
         from warp10_platform_spark.sources import write as W
         from warp10_platform_spark.sources.tables import canonical_points
 
-        if self._base_dir:
-            df = self.spark.read.parquet(self._base_dir)
+        if base_dir:
+            df = self.spark.read.parquet(base_dir)
         else:
             df = canonical_points(self.spark, self.sf_dir).drop("event_id")
-        bufdirs = [
-            os.path.join(self.dir, "buffer", d)
-            for d in sorted(os.listdir(os.path.join(self.dir, "buffer")))
-        ]
-        bufdirs = [d for d in bufdirs if os.path.exists(os.path.join(d, "_SUCCESS"))]
         if bufdirs:
-            cols = df.columns
-            # fold append batches IN ORDER so last-write-wins respects
-            # ingest order across requests, not just within one batch
-            for d in bufdirs:
-                buf = (
-                    self.spark.read.parquet(d)
-                    .unionByName(df.limit(0), allowMissingColumns=True)
-                    .select(*cols)
-                )
-                df = W.update(df, buf)
-        for t in self._load_json("tombstones.json"):
+            df = W.update(df, *[self.spark.read.parquet(d) for d in bufdirs])
+        for t in tombstones:
             df = W.delete(df, t["selector"], t.get("start"), t.get("end"))
-        for m in self._load_json("meta.json"):
+        for m in metas:
             df = W.meta(df, m["selector"], m["attributes"])
         return df
 
+    def points(self) -> DataFrame:
+        """base ∪ buffers, the newest write wins per (series, tick); then
+        tombstones, then the meta overlay — one lazy plan."""
+        return self._compose(*self._listing())
+
     def checkpoint(self) -> str:
         """Fold the read-time overlays into a NEW base snapshot — the
-        compaction step that keeps merge-on-read bounded: the composed
-        ``base ∪ buffer → LWW → ¬tombstones → meta`` plan is written
-        once (partitioned by class, (gts_id, ts)-sorted for locality via
-        sources.maintenance discipline), then the buffer/tombstone/meta
-        overlays reset.  Readers in flight keep their old plan (parquet
-        snapshots are immutable); new reads see the folded base.  At
-        100 TB this runs as a scheduled job, not per request."""
-        new_base = os.path.join(self.dir, f"base_{int(time.time()*1000):013d}")
-        (
-            self.points()
-            .repartition("class")
-            .sortWithinPartitions("class", "gts_id", "ts")
-            .write.partitionBy("class")
-            .parquet(new_base)
-        )
-        with self._lock:
-            import shutil
+        compaction step that keeps merge-on-read bounded: the overlay is
+        listed once, the composed ``base ∪ buffers → LWW → ¬tombstones →
+        meta`` plan of that listing is written (partitioned by class,
+        (gts_id, ts)-sorted for locality via sources.maintenance
+        discipline), then exactly the listed buffers and JSON entries are
+        removed; anything written meanwhile stays in the overlay.
+        Readers in flight keep their old plan (parquet snapshots are
+        immutable); new reads see the folded base.  At 100 TB this runs
+        as a scheduled job, not per request."""
+        import shutil
 
-            for d in os.listdir(os.path.join(self.dir, "buffer")):
-                shutil.rmtree(os.path.join(self.dir, "buffer", d), ignore_errors=True)
-            for f in ("tombstones.json", "meta.json"):
-                p = os.path.join(self.dir, f)
-                if os.path.exists(p):
-                    os.remove(p)
-            old = self._base_dir
-            self._base_dir = new_base
-            if old and old != new_base:
-                shutil.rmtree(old, ignore_errors=True)
+        with self._checkpoint_lock:
+            base_dir, bufdirs, tombstones, metas = listing = self._listing()
+            new_base = os.path.join(self.dir, f"base_{int(time.time()*1000):013d}")
+            (
+                self._compose(*listing)
+                .repartition("class")
+                .sortWithinPartitions("class", "gts_id", "ts")
+                .write.partitionBy("class")
+                .parquet(new_base)
+            )
+            with self._lock:
+                for d in bufdirs:
+                    shutil.rmtree(d, ignore_errors=True)
+                # /delete and /meta only append, so the listed entries
+                # are still the first ones
+                self._write_json("tombstones.json", self._load_json("tombstones.json")[len(tombstones):])
+                self._write_json("meta.json", self._load_json("meta.json")[len(metas):])
+                self._base_dir = new_base
+            if base_dir and base_dir != new_base:
+                shutil.rmtree(base_dir, ignore_errors=True)
         return new_base
 
     def directory(self) -> DataFrame:

@@ -75,34 +75,15 @@ def get_spark(app_name: str = "warp10-platform-spark", shuffle_partitions: int |
         # behavior is unchanged apart from the call-site annotation.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    # Post-shuffle partition sizing (r8 verdict #6 asked for byte-derived
-    # partitions; the r9 measurement REJECTED it as the default): byte-
-    # targeted AQE coalescing (parallelismFirst=false, 16m advisory) cost
+    # Post-shuffle partitions = cores, parallelism-first coalescing (r8
+    # verdict #6 asked for byte-derived partitions; the r9 measurement
+    # REJECTED them): byte-targeted AQE coalescing (16m advisory) cost
     # +60% exec at sf0.1 because this engine's hottest shuffles are
     # CPU-dense but BYTE-tiny — minhash/simhash signature windows and the
-    # HOF-cosine cell join collapsed to 1-2 serial tasks, and an explicit
-    # repartition pin for the latter disabled AQE skew-splitting of the
-    # degenerate one-cell join (2.6s → 17.8s). Parallelism-first with
-    # partitions = cores is the right default for mixed compute density;
-    # SPARK_GRAFT_PARTITION_MODE exists for controlled experiments:
-    # "cores" (default), an integer (pin that count), or "bytes" (the
-    # rejected advisory configuration, kept for A/B probes).
-    mode = os.environ.get("SPARK_GRAFT_PARTITION_MODE", "cores")
-    if shuffle_partitions is not None:
-        # explicit caller choice (tests pin 8)
-        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    elif mode == "bytes":
-        builder = (
-            builder.config("spark.sql.shuffle.partitions", str(max(4 * cpus_i, 64)))
-            .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-            .config(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "16m"),
-            )
-            .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
-        )
-    elif mode.isdigit():
-        builder = builder.config("spark.sql.shuffle.partitions", mode)
-    else:
-        builder = builder.config("spark.sql.shuffle.partitions", str(cpus_i))
+    # HOF-cosine cell join collapsed to 1-2 serial tasks. An explicit
+    # caller choice wins (tests pin 8).
+    builder = builder.config(
+        "spark.sql.shuffle.partitions",
+        str(shuffle_partitions if shuffle_partitions is not None else cpus_i),
+    )
     return builder.getOrCreate()

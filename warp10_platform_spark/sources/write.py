@@ -19,17 +19,20 @@ from pyspark.sql import functions as F
 from warp10_platform_spark.core.selector import selector_predicate
 
 
-def update(points: DataFrame, new_points: DataFrame, value_col: str = "v_double") -> DataFrame:
-    """UPDATE: append new datapoints; a new value at an existing
-    (series, tick) replaces it (storage last-write-wins). The `_gen`
-    column makes write order explicit so the winner is deterministic."""
+def update(points: DataFrame, *batches: DataFrame, value_col: str = "v_double") -> DataFrame:
+    """UPDATE: append batches of new datapoints, given in write order; a
+    newer value at an existing (series, tick) replaces the older one
+    (storage last-write-wins). One pass however many batches there are:
+    the base is tagged ``_gen=0`` and batch i ``_gen=i``, so write order
+    is explicit and one window over the union picks the deterministic
+    winner (the newest batch; inside a batch, the larger value)."""
     cols = points.columns
-    old = points.select(*cols).withColumn("_gen", F.lit(0))
-    new = new_points.select(*cols).withColumn("_gen", F.lit(1))
+    tagged = points.select(*cols).withColumn("_gen", F.lit(0))
+    for gen, batch in enumerate(batches, 1):
+        tagged = tagged.unionAll(batch.select(*cols).withColumn("_gen", F.lit(gen)))
     w = Window.partitionBy("gts_id", "ts").orderBy(F.col("_gen").desc(), F.col(value_col).desc_nulls_last())
     return (
-        old.unionAll(new)
-        .withColumn("_rn", F.row_number().over(w))
+        tagged.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn", "_gen")
     )
