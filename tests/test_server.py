@@ -327,6 +327,167 @@ def test_checkpoint_under_concurrent_writers(spark, sf_dir, tmp_path):
     kept = [d for d in os.listdir(buf) if os.path.exists(os.path.join(buf, d, "_SUCCESS"))]
     assert {os.path.basename(d) for d in folded_bufs}.isdisjoint(kept)
     assert len(folded_bufs) + len(kept) == 5
+    # a batch folded between its write and its scan-memo entry is not memoized
+    assert set(st._scans) <= {st._base_dir, *(os.path.join(buf, d) for d in kept)}
+
+
+def _jobs(spark, fn) -> list:
+    """Ids of the Spark jobs `fn()` starts (its own job group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_append_update_is_one_job_and_counts_accepted_lines(spark, sf_dir, tmp_path):
+    """/update is one Spark job, the parquet write: the accepted count is
+    observed on the write, not read back with a second scan. A malformed
+    line is dropped and not counted."""
+    from warp10_platform_spark.server import Store
+
+    st = Store(spark, sf_dir, str(tmp_path / "store"))
+    got = []
+    body = "1000000// one.a{x=1} 1\nnot a gts line\n2000000// one.a{x=1} 2.5\n"
+    jobs = _jobs(spark, lambda: got.append(st.append_update(body)))
+    assert got == [2]
+    assert len(jobs) == 1, jobs
+    assert _store_points(st, "one.a") == [(1000000, 1), (2000000, None)]
+
+
+def test_parse_literal_list_schema_and_empty(spark):
+    """A literal list parses to the same schema as a `value` string frame
+    (the spark.read.text shape), and an empty list to 0 rows of it."""
+    from warp10_platform_spark.sources.gts_text import parse
+
+    want = parse(spark, spark.createDataFrame([("1// a{} 1",)], "value string")).schema
+    empty = parse(spark, [])
+    assert empty.schema == want
+    assert empty.count() == 0
+    assert parse(spark, ["1// a{} 1"]).schema == want
+
+
+def test_update_fetch_non_ascii_roundtrip(server):
+    """Labels and string values outside ASCII survive /update → /fetch."""
+    import urllib.parse
+
+    lines = "1000000// srv.utf8{city=Zürich,k=日本} 'naïve ✓'\n2000000// srv.utf8{city=Zürich,k=日本} 2.5\n"
+    code, _, hdrs = _post(f"{server}/api/v0/update", lines.encode())
+    assert code == 200 and hdrs["X-Warp10-Ingested"] == "2"
+    sel = urllib.parse.quote("srv.utf8{city=Zürich}")
+    code, body, _ = _get(f"{server}/api/v0/fetch?selector={sel}&format=text")
+    assert sorted(ln for ln in body.splitlines() if ln) == sorted(lines.splitlines())
+
+
+def test_points_memo_reuses_plan_until_listing_changes(spark, sf_dir, tmp_path):
+    """points() on an unchanged listing returns the same DataFrame and
+    starts no job; an update, a tombstone, a meta entry and a checkpoint
+    each give a new plan that shows the change."""
+    from warp10_platform_spark.server import Store
+
+    st = Store(spark, sf_dir, str(tmp_path / "store"))
+    st.append_update("1000000// memo.a{x=1} 1\n")
+    p0 = st.points()
+    again = []
+    assert _jobs(spark, lambda: again.append(st.points())) == []
+    assert again[0] is p0
+
+    def snap():
+        return sorted(
+            (r["ts"], r["v_long"], dict(r["attributes"] or {}))
+            for r in st.points().where("class = 'memo.a'").collect()
+        )
+
+    st.append_update("2000000// memo.a{x=1} 2\n")
+    p1 = st.points()
+    assert p1 is not p0 and snap() == [(1000000, 1, {}), (2000000, 2, {})]
+    st.add_tombstone("memo.a{}", 1000000, 1000000)
+    p2 = st.points()
+    assert p2 is not p1 and snap() == [(2000000, 2, {})]
+    st.add_meta("memo.a{}", {"o": "y"})
+    p3 = st.points()
+    assert p3 is not p2 and snap() == [(2000000, 2, {"o": "y"})]
+    st.checkpoint()
+    p4 = st.points()
+    assert p4 is not p3 and snap() == [(2000000, 2, {"o": "y"})]
+    assert st.points() is p4
+
+
+def test_scan_memo_holds_only_current_listing(spark, sf_dir, tmp_path):
+    """After a checkpoint the scan memo holds only dirs of the current
+    listing: the folded buffers and the previous base are dropped."""
+    from warp10_platform_spark.server import Store
+
+    st = Store(spark, sf_dir, str(tmp_path / "store"))
+    for cycle in range(2):
+        for i in range(2):
+            st.append_update(f"{cycle}00{i}// scan.a{{x={i}}} {i}\n")
+        st.points()
+        st.checkpoint()
+        st.append_update(f"{cycle}999// scan.a{{x=9}} 9\n")
+        st.points()
+        base, bufdirs, _, _ = st._listing()
+        assert set(st._scans) == {base, *bufdirs}
+    assert len(bufdirs) == 1
+
+
+def test_checkpoint_keeps_previous_base_for_plans_in_flight(spark, sf_dir, tmp_path):
+    """A plan taken after one checkpoint still runs after the next one:
+    the previous base is deleted one checkpoint later, not at once."""
+    import os
+
+    from warp10_platform_spark.server import Store
+
+    st = Store(spark, sf_dir, str(tmp_path / "store"))
+    st.append_update("1000000// defer.a{x=1} 1\n")
+    first = st.checkpoint()
+    held = st.points().where("class = 'defer.a'")
+    st.append_update("2000000// defer.a{x=1} 2\n")
+    second = st.checkpoint()
+    assert sorted(r["ts"] for r in held.collect()) == [1000000]
+    st.append_update("3000000// defer.a{x=1} 3\n")
+    third = st.checkpoint()
+    bases = sorted(d for d in os.listdir(st.dir) if d.startswith("base_"))
+    assert bases == [os.path.basename(second), os.path.basename(third)]
+    assert not os.path.exists(first)
+    assert _store_points(st, "defer.a") == [(1000000, 1), (2000000, 2), (3000000, 3)]
+
+
+def test_fetch_class_filter_reaches_every_scan(spark, sf_dir, tmp_path):
+    """The LWW window is keyed by class, so a fetch's class predicate
+    passes it: the class-partitioned base prunes partitions and every
+    buffer scan gets the class as a pushed filter."""
+    from warp10_platform_spark.core.frame import GTSFrame
+    from warp10_platform_spark.server import Store
+
+    st = Store(spark, sf_dir, str(tmp_path / "store"))
+    st.append_update("1000000// prune.a{x=1} 1\n1000000// prune.b{x=1} 1\n")
+    st.checkpoint()
+    st.append_update("2000000// prune.a{x=1} 2\n")
+    st.append_update("3000000// prune.b{x=1} 3\n")
+    gf = GTSFrame.fetch(st.points(), "prune.a{x=1}", 0, 5000000)
+    leaves = gf.df._jdf.queryExecution().sparkPlan().collectLeaves()
+    scans = {}  # root path → scan metadata (untruncated, unlike the plan string)
+    for i in range(leaves.size()):
+        node = leaves.apply(i)
+        md = node.metadata()
+        scans[node.relation().location().rootPaths().head().toString()] = {
+            k: md.apply(k) for k in ("PartitionFilters", "PushedFilters")
+        }
+    base = [md for path, md in scans.items() if "/base_" in path]
+    bufs = [md for path, md in scans.items() if "/buffer/" in path]
+    assert len(base) == 1 and len(bufs) == 2, scans
+    assert "= prune.a)" in base[0]["PartitionFilters"], base
+    for md in bufs:
+        assert "EqualTo(class,prune.a)" in md["PushedFilters"], md
+    assert sorted((r["class"], r["ts"]) for r in gf.df.collect()) == [
+        ("prune.a", 1000000), ("prune.a", 2000000)
+    ]
 
 
 def test_exec_gts_response(server):

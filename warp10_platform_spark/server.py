@@ -167,6 +167,8 @@ class PlasmaHub:
 class Store:
     """Mutable overlay on the immutable base lake.
 
+    - ``base_<ms>/``      the checkpointed base, partitioned by class
+      (before the first checkpoint: the ``events`` points of ``sf_dir``)
     - ``buffer/bNNNNNN``  one parquet batch per /update (LWW over base)
     - ``tombstones.json`` list of {selector, start, end} from /delete
     - ``meta.json``       list of {selector, attributes} from /meta
@@ -183,6 +185,23 @@ class Store:
     deletes exactly the listed buffers and drops exactly the listed
     JSON entries: a write that lands while the base is written survives
     it and stays on top of the new base.
+
+    A base dir and a committed batch dir are write-once: nothing changes
+    inside them until they are deleted.  Two memos rest on that:
+
+    - ``_scans`` maps each such dir to its scan ``DataFrame``, so a dir
+      is listed and its schema inferred at most once (a batch this Store
+      writes is primed with the schema it was written with, and never
+      inferred).  It holds only dirs of the current listing:
+      ``checkpoint()`` drops the dirs it folds.
+    - ``_plan`` is the composed plan of the last listing, keyed on the
+      listing itself (base dir, batch dirs, tombstone and meta entries):
+      ``points()`` returns that same ``DataFrame`` until an /update,
+      /delete, /meta or a checkpoint changes the listing.
+
+    A checkpoint keeps the previous base on disk and deletes only the
+    bases before it, so a plan taken before the checkpoint can still be
+    run; a plan that outlives two checkpoints cannot.
     """
 
     def __init__(self, spark, sf_dir: str, store_dir: str):
@@ -194,6 +213,8 @@ class Store:
         self._lock = threading.Lock()
         self._checkpoint_lock = threading.Lock()
         self._batch_id = max(self._batch_ids(), default=0)
+        self._scans: dict[str, DataFrame] = {}
+        self._plan: tuple[tuple, DataFrame] | None = None
         self.hub = PlasmaHub()
         # a prior checkpoint() may have produced an owned base snapshot
         bases = sorted(d for d in os.listdir(store_dir) if d.startswith("base_"))
@@ -208,6 +229,12 @@ class Store:
 
     # ---- write paths -------------------------------------------------
     def append_update(self, text: str) -> int:
+        """Append the parsed lines of ``text`` as one batch; returns the
+        number of lines accepted (the reference 500s on bad lines; we
+        report the accepted count in a header instead).  One Spark job:
+        the count is observed on the write itself."""
+        from pyspark.sql import Observation
+
         from warp10_platform_spark.sources.gts_text import parse
 
         lines = [ln for ln in text.splitlines() if ln.strip()]
@@ -218,13 +245,14 @@ class Store:
         with self._lock:
             self._batch_id += 1
             sub = os.path.join(self._buf, f"b{self._batch_id:06d}")
-        pts.write.parquet(sub)
+        obs = Observation()
+        pts.observe(obs, F.count(F.lit(1)).alias("n")).write.parquet(sub)
+        # prime the scan memo: this batch is never listed or inferred again
+        self._remember(sub, self.spark.read.schema(pts.schema).parquet(sub))
         # committed → push to Plasma subscribers (the reference's
         # StandaloneIngressHandler also publishes post-store)
         self.hub.publish(text)
-        # count what actually parsed (the reference 500s on bad lines;
-        # we report the accepted count in a header instead)
-        return self.spark.read.parquet(sub).count()
+        return obs.get["n"]
 
     def _write_json(self, name: str, items: list) -> None:
         path = os.path.join(self.dir, name)
@@ -267,16 +295,31 @@ class Store:
                 self._load_json("meta.json"),
             )
 
+    def _remember(self, d: str, scan: DataFrame) -> None:
+        """Memoize the scan of ``d`` unless a checkpoint has folded ``d``
+        meanwhile: the memo holds only dirs of the current listing."""
+        with self._lock:
+            if d == self._base_dir or (os.path.dirname(d) == self._buf and os.path.isdir(d)):
+                self._scans[d] = scan
+
+    def _scan(self, d: str) -> DataFrame:
+        """The scan of write-once dir ``d``, listed and inferred once."""
+        df = self._scans.get(d)
+        if df is None:
+            df = self.spark.read.parquet(d)
+            self._remember(d, df)
+        return df
+
     def _compose(self, base_dir, bufdirs, tombstones, metas) -> DataFrame:
         from warp10_platform_spark.sources import write as W
         from warp10_platform_spark.sources.tables import canonical_points
 
         if base_dir:
-            df = self.spark.read.parquet(base_dir)
+            df = self._scan(base_dir)
         else:
             df = canonical_points(self.spark, self.sf_dir).drop("event_id")
         if bufdirs:
-            df = W.update(df, *[self.spark.read.parquet(d) for d in bufdirs])
+            df = W.update(df, *[self._scan(d) for d in bufdirs])
         for t in tombstones:
             df = W.delete(df, t["selector"], t.get("start"), t.get("end"))
         for m in metas:
@@ -285,8 +328,15 @@ class Store:
 
     def points(self) -> DataFrame:
         """base ∪ buffers, the newest write wins per (series, tick); then
-        tombstones, then the meta overlay — one lazy plan."""
-        return self._compose(*self._listing())
+        tombstones, then the meta overlay — one lazy plan, the same
+        ``DataFrame`` for as long as the listing is unchanged."""
+        listing = self._listing()
+        memo = self._plan
+        if memo is not None and memo[0] == listing:
+            return memo[1]
+        df = self._compose(*listing)
+        self._plan = (listing, df)
+        return df
 
     def checkpoint(self) -> str:
         """Fold the read-time overlays into a NEW base snapshot — the
@@ -296,21 +346,24 @@ class Store:
         (gts_id, ts)-sorted for locality via sources.maintenance
         discipline), then exactly the listed buffers and JSON entries are
         removed; anything written meanwhile stays in the overlay.
-        Readers in flight keep their old plan (parquet snapshots are
-        immutable); new reads see the folded base.  At 100 TB this runs
-        as a scheduled job, not per request."""
+        The previous base stays on disk, so readers in flight keep their
+        old plan; the bases before it are deleted.  New reads see the
+        folded base.  At 100 TB this runs as a scheduled job, not per
+        request."""
         import shutil
 
         with self._checkpoint_lock:
             base_dir, bufdirs, tombstones, metas = listing = self._listing()
             new_base = os.path.join(self.dir, f"base_{int(time.time()*1000):013d}")
+            composed = self._compose(*listing)
             (
-                self._compose(*listing)
-                .repartition("class")
+                composed.repartition("class")
                 .sortWithinPartitions("class", "gts_id", "ts")
                 .write.partitionBy("class")
                 .parquet(new_base)
             )
+            base_scan = self.spark.read.schema(composed.schema).parquet(new_base)
+            folded = {base_dir, *bufdirs}
             with self._lock:
                 for d in bufdirs:
                     shutil.rmtree(d, ignore_errors=True)
@@ -319,8 +372,14 @@ class Store:
                 self._write_json("tombstones.json", self._load_json("tombstones.json")[len(tombstones):])
                 self._write_json("meta.json", self._load_json("meta.json")[len(metas):])
                 self._base_dir = new_base
-            if base_dir and base_dir != new_base:
-                shutil.rmtree(base_dir, ignore_errors=True)
+                self._scans = {d: s for d, s in self._scans.items() if d not in folded}
+                self._scans[new_base] = base_scan
+            # deferred deletion: keep one base back for plans taken
+            # before this checkpoint
+            for d in os.listdir(self.dir):
+                path = os.path.join(self.dir, d)
+                if d.startswith("base_") and path not in (new_base, base_dir):
+                    shutil.rmtree(path, ignore_errors=True)
         return new_base
 
     def directory(self) -> DataFrame:
@@ -542,7 +601,6 @@ class _Handler(BaseHTTPRequestHandler):
         qs = urllib.parse.parse_qs(url.query)
         if self._ws_upgrade(url):
             return
-        t0 = time.perf_counter()
         try:
             if url.path == f"{API}/fetch":
                 ctype, chunks = _fetch_response(self.store, qs)

@@ -85,9 +85,14 @@ def parse_gts_lines(lines: DataFrame, default_ts: int | None = None) -> DataFram
 def parse(spark, lines: list[str] | DataFrame, default_ts: int | None = None) -> DataFrame:
     """PARSE / SMARTPARSE (script/functions/PARSE.java, SMARTPARSE.java):
     parse GTS input-format strings inside a job — literal list or an
-    existing one-string-column DataFrame; same regex pipeline as ingest."""
+    existing one-string-column DataFrame; same regex pipeline as ingest.
+
+    A literal list enters as an Arrow table, a JVM-side local relation:
+    no Python worker starts for the jobs that read it."""
     if isinstance(lines, list):
-        lines = spark.createDataFrame([(s,) for s in lines], "value string")
+        import pyarrow as pa
+
+        lines = spark.createDataFrame(pa.table({"value": pa.array(lines, pa.string())}))
     return parse_gts_lines(lines, default_ts=default_ts)
 
 

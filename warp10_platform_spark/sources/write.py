@@ -25,12 +25,19 @@ def update(points: DataFrame, *batches: DataFrame, value_col: str = "v_double") 
     (storage last-write-wins). One pass however many batches there are:
     the base is tagged ``_gen=0`` and batch i ``_gen=i``, so write order
     is explicit and one window over the union picks the deterministic
-    winner (the newest batch; inside a batch, the larger value)."""
+    winner (the newest batch; inside a batch, the larger value).
+
+    The window is keyed by ``class`` too. ``gts_id`` already hashes the
+    class, so the winners are the same, and a filter on class passes
+    the window down to every scan, as one on ``ts`` does: a fetch of
+    one class prunes the class-partitioned base and filters each batch."""
     cols = points.columns
     tagged = points.select(*cols).withColumn("_gen", F.lit(0))
     for gen, batch in enumerate(batches, 1):
         tagged = tagged.unionAll(batch.select(*cols).withColumn("_gen", F.lit(gen)))
-    w = Window.partitionBy("gts_id", "ts").orderBy(F.col("_gen").desc(), F.col(value_col).desc_nulls_last())
+    w = Window.partitionBy("class", "gts_id", "ts").orderBy(
+        F.col("_gen").desc(), F.col(value_col).desc_nulls_last()
+    )
     return (
         tagged.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
